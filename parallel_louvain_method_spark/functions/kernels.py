@@ -118,11 +118,12 @@ def louvain_sequential(
     m2: float | None = None,
     max_sweeps: int = 1000,
     anneal: bool = False,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[float], bool]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[float], bool, list[int]]:
     """One level of sequential-semantics Louvain, faithful to
     ``Communities::iterate`` (src/community.cpp:64-102).
 
-    Returns ``(node_to_comm, in_w, total, modularity_per_sweep, improved)``.
+    Returns ``(node_to_comm, in_w, total, modularity_per_sweep, improved,
+    moves_per_sweep)``; ``improved`` is ``sum(moves_per_sweep) > 0``.
     ``m2`` defaults to ``2 * ecount`` (reference's m-is-a-count quirk,
     SURVEY.md §1.5); pass ``2 * Σw`` for standard semantics on weighted /
     coarsened graphs.
@@ -145,6 +146,7 @@ def louvain_sequential(
     row_index, col, w = csr.row_index, csr.column_index, csr.weights
 
     q_per_sweep: list[float] = []
+    moves_per_sweep: list[int] = []
     total_moves = 0
     improvement = False
     for sweep in range(max_sweeps):
@@ -184,9 +186,10 @@ def louvain_sequential(
         if total_moves > 0:
             improvement = True
         q_per_sweep.append(modularity(in_w, total, m2))
+        moves_per_sweep.append(total_moves - prev_moves)
         if total_moves == prev_moves:
             break
-    return node_comm, in_w, total, q_per_sweep, improvement
+    return node_comm, in_w, total, q_per_sweep, improvement, moves_per_sweep
 
 
 def louvain_sequential_edges(
@@ -196,19 +199,20 @@ def louvain_sequential_edges(
     m2: float | None = None,
     max_sweeps: int = 1000,
     anneal: bool = False,
-) -> tuple[np.ndarray, np.ndarray, int, float]:
+) -> tuple[np.ndarray, np.ndarray, int, float, bool, list[int]]:
     """Run a full Louvain level to convergence on a raw (possibly
     non-dense, non-symmetric) edge array.
 
     Densifies ids locally, symmetrizes + dedups, packs CSR, runs
     :func:`louvain_sequential`, and maps community labels back to original
     id space (a community is labeled by the original id of its
-    representative vertex).  Returns ``(vertices, communities, sweeps, Q)``.
+    representative vertex).
 
-    This is the single-``applyInPandas``-call fast path: one Spark job per
-    *level* instead of one per sweep, used once coarsening has shrunk the
-    graph below the superstep threshold.  Returns
-    ``(vertices, communities, sweeps, Q, improved)``.
+    This is the in-driver fast path: one kernel call per *level* instead
+    of one Spark job per sweep, used once coarsening has shrunk the graph
+    below the superstep threshold.  Returns ``(vertices, communities,
+    sweeps, Q, improved, moves_per_sweep)``, the last being the number of
+    vertices that changed community in each sweep.
     """
     ids = np.unique(np.concatenate([src, dst]))
     s = np.searchsorted(ids, src)
@@ -216,7 +220,7 @@ def louvain_sequential_edges(
     csr = pack_csr(s, d, weight, n=len(ids))
     if m2 is None:
         m2 = float(csr.weights.sum())
-    comm, in_w, tot, qs, imp = louvain_sequential(
+    comm, in_w, tot, qs, imp, moves = louvain_sequential(
         csr, m2=m2, max_sweeps=max_sweeps, anneal=anneal
     )
     q = qs[-1] if qs else 0.0
@@ -231,7 +235,7 @@ def louvain_sequential_edges(
             comm[rows[self_rows]], weights=csr.weights[self_rows], minlength=len(ids)
         )
         q = modularity(in_w + self_w, tot, m2)
-    return ids, ids[comm], len(qs), q, imp
+    return ids, ids[comm], len(qs), q, imp, moves
 
 
 def _vectorized_moves(
@@ -541,15 +545,18 @@ def louvain_vectorized_edges(
     m2: float | None = None,
     max_sweeps: int = 60,
     anneal: bool = False,
-) -> tuple[np.ndarray, np.ndarray, int, float, bool]:
+) -> tuple[np.ndarray, np.ndarray, int, float, bool, list[int]]:
     """Whole-graph vectorized Louvain level (single-process numpy loop).
 
     The mid-size local-mode path: same bulk-synchronous semantics as the
     superstep driver (hashed active halves, zero-move convergence) but with
     numpy recomputing community totals between passes — no per-sweep Spark
     jobs and no per-vertex Python loop.  Returns
-    ``(vertices, communities, sweeps, Q, improved)`` like
-    :func:`louvain_sequential_edges`.
+    ``(vertices, communities, sweeps, Q, improved, moves_per_sweep)`` like
+    :func:`louvain_sequential_edges`.  The communities are the best-Q
+    snapshot, so ``moves_per_sweep`` lists the sweeps up to that snapshot
+    only (sweeps after it were rolled back); ``improved`` is again
+    ``sum(moves_per_sweep) > 0``.
     """
     ids = np.unique(np.concatenate([src, dst]))
     s0 = np.searchsorted(ids, src)
@@ -581,6 +588,8 @@ def louvain_vectorized_edges(
     # Q evaluation per sweep — noise next to the move pass itself.
     improved = False
     sweeps = 0
+    moves: list[int] = []
+    best_len = 0  # sweeps that produced the best-Q snapshot
     zero_streak = 0
     best_moves = float("inf")
     best_sweep = -1
@@ -626,10 +635,12 @@ def louvain_vectorized_edges(
             final_label = np.where(chase, mid[mover_comm], mover_comm)
             comm[mover_pos] = final_label
             n_moved = int((final_label != old).sum())
+            moves.append(n_moved)
             q_now = q_of(comm)
             if q_now > best_q + 1e-15:
                 best_q = q_now
                 best_comm = comm.copy()
+                best_len = len(moves)
                 improved = True
             if n_moved == 0:
                 zero_streak += 1
@@ -653,10 +664,11 @@ def louvain_vectorized_edges(
             elif sweep - best_sweep >= 6:
                 break
         else:
+            moves.append(0)
             zero_streak += 1
             if zero_streak >= 3:
                 break
-    return ids, ids[best_comm], sweeps, best_q, improved
+    return ids, ids[best_comm], sweeps, best_q, improved, moves[:best_len]
 
 
 def louvain_block_moves_vectorized(

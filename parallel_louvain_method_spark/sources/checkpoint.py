@@ -4,10 +4,24 @@ The reference intended but never implemented this
 (/root/reference/src/distcommunity.cpp:899 "TODO ... Checkpoint edgelist
 here").  Layout, one directory per completed level::
 
-    <dir>/level=<k>/edges/        coarse symmetric edge table (parquet)
+    <dir>/level=<k>/edges/        coarse symmetric edge table (parquet):
+                                  the input of level k+1
     <dir>/level=<k>/assignment/   flat vtx -> community (parquet)
-    <dir>/level=<k>/metrics.json  modularity, sweeps, moves, wall time,
-                                  per-partition row counts (lineage)
+    <dir>/level=<k>/metrics.json  the level's record (below)
+
+``metrics.json`` fields, as the multilevel driver writes them:
+
+- ``level``, ``engine``: the level number and the engine that ran it;
+- ``modularity``: Q of the level's partition (the resumed run's baseline
+  for its ``min_q_gain`` test);
+- ``sweeps``, ``moves_per_sweep``: sweeps run and vertices moved per sweep;
+- ``n_vertices``, ``n_edges_sym``: the level's input size;
+- ``n_next``: vertex count of the coarse table in ``edges/`` (dense ids
+  0..n_next-1).  A resume hands it to the next level as its dense-id hint
+  and, when the run fits the driver budget, reads ``assignment/`` back into
+  numpy state.  Checkpoints without it (written before it existed) still
+  resume, on the DataFrame path;
+- ``wall_sec``: the level's wall time.
 
 Parquet gives partition-parallel write/read.  ALL filesystem access —
 including the metrics sidecar and directory listing — goes through the
@@ -25,7 +39,7 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _fs(spark: SparkSession, path: str):
@@ -51,16 +65,6 @@ def save_level(
     d = _level_dir(base, level)
     coarse_edges.write.mode("overwrite").parquet(f"{d}/edges")
     flat_assign.write.mode("overwrite").parquet(f"{d}/assignment")
-    # per-partition lineage: row counts per shuffle partition of the state
-    part_counts = (
-        flat_assign.groupBy(F.spark_partition_id().alias("partition"))
-        .count()
-        .collect()
-    )
-    metrics = dict(metrics)
-    metrics["assignment_partitions"] = {
-        int(r["partition"]): int(r["count"]) for r in part_counts
-    }
     # metrics.json LAST = the completeness marker; Hadoop FS stream so the
     # sidecar lands on the same filesystem as the parquet (hdfs/s3a/local)
     fs, jpath = _fs(spark, f"{d}/metrics.json")

@@ -37,7 +37,7 @@ def test_golden16_sequential_louvain():
     m2 = 2.0 * csr.ecount
     q0 = kernels.modularity(np.zeros(16), deg, m2)
     assert q0 == pytest.approx(GOLDEN16_Q_INITIAL, abs=EPS)
-    comm, in_w, tot, qs, improved = kernels.louvain_sequential(csr)
+    comm, in_w, tot, qs, improved, _ = kernels.louvain_sequential(csr)
     assert improved
     assert qs[-1] == pytest.approx(GOLDEN16_Q_FINAL, abs=EPS)
     assert len(set(comm.tolist())) == GOLDEN16_N_COMMUNITIES
@@ -76,7 +76,7 @@ def test_modularity_bounds_property():
         w = np.ones(m)
         keep = src != dst
         csr = kernels.pack_csr(src[keep], dst[keep], w[keep])
-        comm, in_w, tot, qs, _ = kernels.louvain_sequential(csr)
+        comm, in_w, tot, qs, _, _ = kernels.louvain_sequential(csr)
         assert all(-0.5 - 1e-9 <= q <= 1.0 + 1e-9 for q in qs)
         # modularity non-decreasing across sweeps (greedy local moves)
         assert all(qs[i + 1] >= qs[i] - 1e-9 for i in range(len(qs) - 1))
@@ -146,7 +146,7 @@ def test_louvain_sequential_improves_or_holds(e):
     deg = kernels.weighted_degrees(csr)
     m2 = float(csr.weights.sum())
     q0 = kernels.modularity(np.zeros(n), deg, m2)
-    comm, in_w, tot, qs, improved = kernels.louvain_sequential(csr, m2=m2)
+    comm, in_w, tot, qs, improved, _ = kernels.louvain_sequential(csr, m2=m2)
     assert qs[-1] >= q0 - 1e-9
     assert all(qs[i + 1] >= qs[i] - 1e-9 for i in range(len(qs) - 1))
     assert comm.min() >= 0 and comm.max() < n
@@ -165,10 +165,10 @@ def test_vectorized_matches_quality_class(e):
     keep = src != dst
     if not keep.any():
         return
-    ids, comm_s, _, q_seq, _ = kernels.louvain_sequential_edges(
+    ids, comm_s, _, q_seq, _, _ = kernels.louvain_sequential_edges(
         src[keep], dst[keep], w[keep]
     )
-    ids_v, comm_v, _, q_vec, _ = kernels.louvain_vectorized_edges(
+    ids_v, comm_v, _, q_vec, _, _ = kernels.louvain_vectorized_edges(
         src[keep], dst[keep], w[keep]
     )
     assert ids.tolist() == ids_v.tolist()
@@ -246,3 +246,29 @@ def test_barrier_blob_delta_zstd_roundtrip():
     a = sorted(zip(s.tolist(), d.tolist(), w.tolist()))
     b = sorted(zip(s2.tolist(), d2.tolist(), w2.tolist()))
     assert a == b
+
+
+@given(random_edge_lists())
+@settings(max_examples=30, deadline=None)
+def test_local_kernels_report_real_moves_per_sweep(e):
+    """Both driver-side kernels report per-sweep mover counts: the
+    sequential kernel one per sweep, ending in its zero-move sweep; the
+    vectorized kernel one per sweep up to its best-Q snapshot.  Either
+    way the counts are positive in total exactly when the kernel reports
+    an improvement (the multilevel driver's stop signal)."""
+    src, dst, w = e
+    keep = src != dst
+    if not keep.any():
+        return
+    *_, sweeps, _, imp, moves = kernels.louvain_sequential_edges(
+        src[keep], dst[keep], w[keep]
+    )
+    assert len(moves) == sweeps and moves[-1] == 0
+    assert all(m >= 0 for m in moves)
+    assert (sum(moves) > 0) == imp
+    *_, sweeps_v, _, imp_v, moves_v = kernels.louvain_vectorized_edges(
+        src[keep], dst[keep], w[keep]
+    )
+    assert len(moves_v) <= sweeps_v
+    assert all(m >= 0 for m in moves_v)
+    assert (sum(moves_v) > 0) == imp_v

@@ -512,3 +512,131 @@ def test_barrier_transport_death_midlevel_retries_on_allgather(
     assert assign.select("vtx").distinct().count() == 16
     err = capfd.readouterr().err
     assert "retrying the level over coordinator allGather" in err
+
+
+def _ring_of_cliques(spark, n_cliques=24, size=5):
+    """Cliques joined in a ring: level 0 finds the cliques and later
+    levels merge neighbouring ones (the resolution limit), so a run
+    completes several levels."""
+    edges = []
+    for c in range(n_cliques):
+        base = c * size
+        edges += [
+            (base + i, base + j, 1.0)
+            for i in range(size) for j in range(i + 1, size)
+        ]
+        edges.append((base, ((c + 1) % n_cliques) * size + 1, 1.0))
+    return spark.createDataFrame(edges, "src long, dst long, weight double")
+
+
+def _assignment(res) -> dict:
+    return {r["vtx"]: r["comm"] for r in res.assignment.collect()}
+
+
+def _drop_last_level_marker(ck: str) -> int:
+    """Simulate a crash inside the last level: remove its completeness
+    marker.  Returns the number of levels the run completed."""
+    import glob
+    import os
+
+    lv = sorted(
+        glob.glob(os.path.join(ck, "level=*")),
+        key=lambda p: int(p.rsplit("=", 1)[1]),
+    )
+    os.remove(os.path.join(lv[-1], "metrics.json"))
+    return len(lv)
+
+
+def test_checkpointed_run_matches_plain_run(spark, tmp_path):
+    """Checkpointing changes no result: same per-vertex assignment, same
+    Q and the same levels as the run without a checkpoint directory, and
+    each level's metrics.json names the next level's vertex count."""
+    from parallel_louvain_method_spark.sources.checkpoint import load_level
+
+    df = _ring_of_cliques(spark)
+    plain = louvain(spark, df)
+    ck = str(tmp_path / "ck")
+    saved = louvain(spark, df, checkpoint_dir=ck)
+    assert len(plain.levels) >= 2
+    assert _assignment(saved) == _assignment(plain)
+    assert saved.modularity == plain.modularity
+    assert [lv.n_vertices for lv in saved.levels] == [
+        lv.n_vertices for lv in plain.levels
+    ]
+    for k, lv in enumerate(saved.levels):
+        edges, _, meta = load_level(spark, ck, k)
+        assert meta["moves_per_sweep"] == lv.moves_per_sweep
+        # n_next = the dense vertex count of the coarse table written
+        n_next = meta["n_next"]
+        verts = sorted(r["v"] for r in G.vertex_ids(edges).collect())
+        assert verts == list(range(n_next))
+        if k + 1 < len(saved.levels):
+            # a level the run continued past moved vertices
+            assert sum(lv.moves_per_sweep) > 0
+            assert n_next == saved.levels[k + 1].n_vertices
+
+
+@pytest.mark.parametrize("path", ["numpy", "dataframe"])
+def test_resume_after_lost_level_is_exact(
+    spark, tmp_path, monkeypatch, capfd, path
+):
+    """Losing the last level's metrics.json and resuming reproduces the
+    uninterrupted assignment and Q exactly, on the numpy coarsen path and
+    on the DataFrame path (driver budget forced to 0); stderr names the
+    path each level took."""
+    import parallel_louvain_method_spark.operators.louvain as L
+
+    if path == "dataframe":
+        monkeypatch.setattr(L, "DRIVER_STATE_MAX_VERTICES", 0)
+    monkeypatch.setenv("PLM_DEBUG_SWEEPS", "1")
+    df = _ring_of_cliques(spark)
+    ck = str(tmp_path / "ck")
+    full = louvain(spark, df, checkpoint_dir=ck)
+    assert _drop_last_level_marker(ck) >= 2
+    capfd.readouterr()
+    resumed = louvain(spark, df, checkpoint_dir=ck, resume=True)
+    err = capfd.readouterr().err
+    assert _assignment(resumed) == _assignment(full)
+    assert resumed.modularity == full.modularity
+    # only the levels after the last complete one ran again
+    assert 0 < len(resumed.levels) < len(full.levels)
+    want = "coarsen=numpy" if path == "numpy" else "coarsen=DataFrame"
+    lines = [ln for ln in err.splitlines() if ln.startswith("[louvain] level")]
+    assert len(lines) == len(resumed.levels), err
+    assert all(want in ln for ln in lines), err
+    if path == "dataframe":
+        # both coarsen paths renumber communities the same way
+        monkeypatch.undo()
+        assert _assignment(louvain(spark, df)) == _assignment(full)
+
+
+def test_resume_from_checkpoint_without_n_next(
+    spark, tmp_path, monkeypatch, capfd
+):
+    """A checkpoint written before metrics.json carried ``n_next`` still
+    resumes to exactly the uninterrupted result (on the DataFrame path)."""
+    import glob
+    import json
+    import os
+
+    monkeypatch.setenv("PLM_DEBUG_SWEEPS", "1")
+    df = _ring_of_cliques(spark)
+    ck = str(tmp_path / "ck")
+    full = louvain(spark, df, checkpoint_dir=ck)
+    assert _drop_last_level_marker(ck) >= 2
+    for f in glob.glob(os.path.join(ck, "level=*", "metrics.json")):
+        with open(f) as fh:
+            meta = json.load(fh)
+        del meta["n_next"]
+        with open(f, "w") as fh:
+            json.dump(meta, fh)
+        # the local Hadoop filesystem checks a .crc sidecar on read
+        crc = os.path.join(os.path.dirname(f), ".metrics.json.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    capfd.readouterr()
+    resumed = louvain(spark, df, checkpoint_dir=ck, resume=True)
+    err = capfd.readouterr().err
+    assert _assignment(resumed) == _assignment(full)
+    assert resumed.modularity == full.modularity
+    assert "coarsen=DataFrame (vertex count unknown" in err, err

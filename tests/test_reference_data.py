@@ -114,7 +114,7 @@ def test_cora_louvain_pinned(spark):
 
     # per-vertex parity with the kernel run directly on the raw arrays
     pdf = raw.select("src", "dst", "weight").toPandas()
-    v, c, sweeps, q, imp = kernels.louvain_sequential_edges(
+    v, c, sweeps, q, imp, _ = kernels.louvain_sequential_edges(
         pdf["src"].to_numpy(), pdf["dst"].to_numpy(), pdf["weight"].to_numpy()
     )
     expected = dict(zip(v.tolist(), c.tolist()))
